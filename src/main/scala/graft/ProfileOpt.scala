@@ -42,10 +42,6 @@ object ProfileOpt {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // experiment knob: SPARK_GRAFT_LIST_THRESHOLD overrides the parallel
-    // partition-discovery threshold (default 32) for listing A/Bs
-    sys.env.get("SPARK_GRAFT_LIST_THRESHOLD").foreach(v =>
-      spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", v))
     val which = if (args.isEmpty) Set("near", "crawl") else args.toSet
 
     // per-JOB wall breakdown: callsite + duration, so a composed

@@ -1,8 +1,7 @@
 package graft.dedup
 
-import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,12 +29,10 @@ import org.apache.spark.sql.types._
   *    age-based retention at [[compact]] — a year-long stream can stop
   *    deduplicating against dead crawls.
   *
-  * Crash/duplicate contract (shared with the CDC sinks): appends land
-  * AFTER survivor delivery, compaction writes merged files BEFORE
-  * deleting the inputs. Every reader tolerates duplicate catalog rows —
-  * candidate hits are deduplicated per (new, old) pair and signatures
-  * per id — so a crash between the two halves of any operation leaves
-  * harmless duplicates, never a lost or torn catalog.
+  * Storage, compaction, rebucket and maintenance are the shared
+  * [[BucketedStore]], whose scaladoc holds the crash contract. Every
+  * reader tolerates duplicate catalog rows — candidate hits are
+  * deduplicated per (new, old) pair and signatures per id.
   *
   * Storage: ~`bands`× the flat (id, __sig) layout (the signature rides
   * every band row). At 10⁹ survivors × 16 bands × ~550 B ≈ 8 TB — the
@@ -62,7 +59,16 @@ object BandedCatalog {
     StructField("bucket", IntegerType, nullable = false)))
 
   def bucketOf(bandKey: Column, numBuckets: Int): Column =
-    pmod(bandKey, lit(numBuckets.toLong)).cast(IntegerType)
+    BucketedStore.bucketOf(bandKey, numBuckets)
+
+  /** Layout, compaction, rebucket and maintenance: a doc's duplicate
+    * band rows collapse to one, keeping the latest `added` tag (so
+    * retention ages a re-seen doc from its most recent sighting). */
+  private val store = new BucketedStore("banded catalog", DataSchema,
+    "band_key",
+    _.groupBy(col("bucket"), col("band"), col("band_key"), col("id"))
+      .agg(first(col("__sig")).as("__sig"), max(col("added")).as("added")),
+    readMeta(_, _).map(_.numBuckets))
 
   // ------------------------------------------------------------- meta
 
@@ -74,35 +80,20 @@ object BandedCatalog {
 
   private def metaPath(dir: String) = new Path(dir, "_graft_catalog.json")
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit =
+    BucketedStore.writeText(spark, metaPath(dir),
+      s"""{"numBuckets":${m.numBuckets},"bands":${m.bands},"rowsPerBand":${m.rowsPerBand},"shingleSize":${m.shingleSize}}""")
 
-  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit = {
-    val out = fs(spark, dir).create(metaPath(dir), true)
-    try out.write(
-      s"""{"numBuckets":${m.numBuckets},"bands":${m.bands},"rowsPerBand":${m.rowsPerBand},"shingleSize":${m.shingleSize}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
-    val p = metaPath(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  def readMeta(spark: SparkSession, dir: String): Option[Meta] =
+    BucketedStore.readText(spark, metaPath(dir)).map { text =>
       def field(name: String): Int =
         s""""$name":(\\d+)""".r.findFirstMatchIn(text)
           .map(_.group(1).toInt)
           .getOrElse(throw new IllegalStateException(
-            s"banded catalog meta at $p is missing '$name': $text"))
-      Some(Meta(field("numBuckets"), field("bands"), field("rowsPerBand"),
-        field("shingleSize")))
+            s"banded catalog meta at ${metaPath(dir)} is missing '$name': $text"))
+      Meta(field("numBuckets"), field("bands"), field("rowsPerBand"),
+        field("shingleSize"))
     }
-  }
 
   private def requireMeta(
       spark: SparkSession, dir: String, m: Meta): Unit =
@@ -111,23 +102,6 @@ object BandedCatalog {
         s"banded catalog at $dir was written with $have; " +
           s"opening it with $m would silently miss duplicates")
     }
-
-  /** Data files without a meta file mean rows of UNKNOWN banding — a
-    * flat-layout catalog from before this format, or a crash between
-    * data and meta writes of a pre-fix version. Reading them as empty
-    * would silently drop all dedup state (every past signature stops
-    * suppressing), and appending would mix layouts; fail loudly
-    * instead. (The accreting append writer makes this window
-    * impossible: meta lands BEFORE the first data write. The one-shot
-    * [[rebucket]] inverts the order on purpose — meta LAST — so this
-    * guard doubles as its commit marker.) */
-  private def rejectOrphanData(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    require(dataFiles(f, dir).isEmpty,
-      s"catalog at $dir has parquet data but no meta file — refusing to " +
-        "treat unknown-layout rows as an empty catalog; rebuild the " +
-        "catalog (or restore its meta) before reading or appending")
-  }
 
   // ---------------------------------------------------------- append
 
@@ -155,93 +129,22 @@ object BandedCatalog {
     requireMeta(spark, dir, m)
     // meta BEFORE the first data write: a crash between the two must
     // leave a readable (empty-but-typed) catalog, never data rows whose
-    // layout nothing records (see rejectOrphanData)
+    // layout nothing records (BucketedStore.rejectOrphanData)
     if (readMeta(spark, dir).isEmpty) {
-      rejectOrphanData(spark, dir)
+      store.rejectOrphanData(spark, dir)
       writeMeta(spark, dir, m)
     }
-    val frame = bandRows(signatures, bands, rowsPerBand, numBuckets, added)
-    // manifest bookkeeping rides the write as an observed aggregate —
-    // see ExactCatalog.append
-    val obs =
-      if (graft.ops.Manifest.enabled) Some(org.apache.spark.sql.Observation())
-      else None
-    obs.fold(frame)(o => frame.observe(o, collect_set(col("bucket")).as("touched")))
-      .repartition(col("bucket"))
-      // bucket FIRST: the partitioned-file writer requires ordering by
-      // the partition column and would insert its own Sort(bucket) over
-      // a bare band_key sort — an extra (unstable) sort that both wastes
-      // work and voids the band_key file order the row-group skipping
-      // relies on. With the bucket prefix the writer's requirement is
-      // already satisfied and the band_key order survives verbatim.
-      .sortWithinPartitions("bucket", "band_key")
-      .write.mode("append").partitionBy("bucket").parquet(dir)
-    obs.foreach(o => graft.ops.Manifest.recordAppend(spark, dir,
-      o.get("touched").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Number].intValue).toSeq))
+    store.write(bandRows(signatures, bands, rowsPerBand, numBuckets, added), dir)
   }
 
   // ------------------------------------------------------------ read
 
   /** The whole catalog (empty frame before first append). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    if (!fs(spark, dir).exists(new Path(dir)) || readMeta(spark, dir).isEmpty) {
-      if (fs(spark, dir).exists(new Path(dir))) rejectOrphanData(spark, dir)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
-    } else graft.ops.Listing.driverSide(spark) {
-      spark.read.schema(DataSchema).parquet(dir)
-    }
-
-  /** Relation over ONLY the probed buckets' directories (r17
-    * optimization, guide §6): `spark.read.parquet(dir)` lists EVERY
-    * bucket directory before partition pruning ever applies — an
-    * O(numBuckets) listing per trigger (measured 1.6 s/trigger on the
-    * bench's 1024-bucket catalog; on an object store it is numBuckets
-    * LIST calls). A batch's probe set is O(batch), so the listing
-    * should be too: one root listStatus finds which probed buckets
-    * exist, and the relation is built over exactly those directories —
-    * `basePath` keeps the `bucket` partition column parsing. Rows read
-    * are IDENTICAL to the pruned full-catalog read (a catalog row
-    * outside the probed buckets could never match the batch). Shared
-    * verbatim by [[ExactCatalog.readForBatch]]. */
-  private[dedup] def readBucketDirs(
-      spark: SparkSession, dir: String, buckets: Seq[Int],
-      schema: StructType, numBuckets: Int): DataFrame =
-    // MANIFEST-FIRST (r18, guide §6): a catalog with a manifest builds
-    // the relation from recorded file statuses — zero listStatus calls
-    // on the probe path, on any store. Rows are identical to the
-    // listing relation over the same buckets (Manifest scaladoc); dirs
-    // without a manifest (pre-r18 catalogs, torn writes) fall through
-    // to the listing branches below.
-    graft.ops.Manifest.relation(spark, dir, buckets.distinct, schema)
-      .getOrElse {
-        val f = fs(spark, dir)
-        val present = f.listStatus(new Path(dir)).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          .map(_.getPath.getName.stripPrefix("bucket=").toInt).toSet
-        val sel = buckets.distinct.filter(present)
-        if (sel.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else if (sel.size * 2 <= numBuckets)
-          // SPARSE probe (≤ half the buckets): explicit directories — the
-          // listing covers O(probed) dirs, not O(catalog); driver-side
-          // listing (Listing scaladoc) keeps >32 dirs from paying a
-          // distributed listing job per trigger
-          graft.ops.Listing.driverSide(spark) {
-            spark.read.schema(schema).option("basePath", dir)
-              .parquet(sel.map(b => new Path(dir, s"bucket=$b").toString): _*)
-          }
-        else
-          // DENSE probe: most buckets are touched anyway, so a single-root
-          // relation + partition filter is strictly cheaper — one root path
-          // lists once, instead of |probed| top-level paths each globbed and
-          // listed as their own parallel-discovery input (measured 1.6 →
-          // 5.4 s regression on the 64-bucket exact catalog's full-width
-          // probes before this guard)
-          graft.ops.Listing.driverSide(spark) {
-            spark.read.schema(schema).parquet(dir)
-          }.filter(col("bucket").isin(sel: _*))
-      }
+    if (readMeta(spark, dir).isEmpty) {
+      store.rejectOrphanData(spark, dir)
+      store.empty(spark)
+    } else store.readAll(spark, dir)
 
   /** The catalog rows a batch of banded keys can possibly match:
     * partition-prunes to the batch's buckets — by building the relation
@@ -259,8 +162,8 @@ object BandedCatalog {
       maxPushdownKeys: Int = DefaultMaxPushdownKeys): DataFrame =
     readMeta(spark, dir) match {
       case None =>
-        if (fs(spark, dir).exists(new Path(dir))) rejectOrphanData(spark, dir)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
+        store.rejectOrphanData(spark, dir)
+        store.empty(spark)
       case Some(m) =>
         // ONE bounded collect for the common case (r8 verdict residual
         // note: the old buckets-then-keys pair ran two Spark jobs over
@@ -275,93 +178,50 @@ object BandedCatalog {
         val keys = batchBanded.select(col("band_key"))
           .distinct().limit(maxPushdownKeys + 1)
           .collect().map(_.getLong(0))
-        if (keys.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
+        if (keys.isEmpty) store.empty(spark)
         else if (keys.length > maxPushdownKeys) {
           val buckets = batchBanded
             .select(bucketOf(col("band_key"), m.numBuckets).as("bucket"))
             .distinct().collect().map(_.getInt(0))
-          readBucketDirs(spark, dir, buckets.toSeq, DataSchema, m.numBuckets)
+          store.readBucketDirs(spark, dir, buckets.toSeq, m.numBuckets)
         } else {
-          val buckets = keys
-            .map(k => (((k % m.numBuckets) + m.numBuckets) % m.numBuckets).toInt)
-            .distinct
-          readBucketDirs(spark, dir, buckets.toSeq, DataSchema, m.numBuckets)
+          val buckets = keys.map(BucketedStore.bucketOfKey(_, m.numBuckets)).distinct
+          store.readBucketDirs(spark, dir, buckets.toSeq, m.numBuckets)
             .filter(col("band_key").isin(keys.toSeq: _*))
         }
     }
 
   // -------------------------------------------------------- rebucket
 
-  /** Re-shard the catalog into `toDir` under a DIFFERENT bucket count —
-    * the growth path when survivors outgrow the bucket choice (the class
-    * doc's sizing note: a 10⁹-doc catalog wants thousands of buckets,
-    * not the default 64). Banding parameters are UNCHANGED — they define
-    * which duplicates exist; only the physical sharding moves.
-    *
-    * Rebuild-into-fresh-dir, same rationale as
-    * [[ExactCatalog.rebucket]]: the source stays readable and untouched,
-    * the target lands complete (rows collapsed like [[compact]], meta
-    * LAST as the commit marker — a crashed run leaves a target with no
-    * meta that every reader refuses loudly, never a silently-partial
-    * signature set), the caller cuts over by path; a crashed run is
-    * rerun into a fresh target (the non-empty guard refuses reuse
-    * loudly). */
+  /** Re-shard the catalog into the fresh dir `toDir` under a DIFFERENT
+    * bucket count — the growth path when survivors outgrow the bucket
+    * choice (a 10⁹-doc catalog wants thousands of buckets, not the
+    * default 64). Banding parameters are UNCHANGED — they define which
+    * duplicates exist; only the physical sharding moves. Same fresh-dir,
+    * meta-LAST discipline as [[ExactCatalog.rebucket]]
+    * ([[BucketedStore.rebucket]]). */
   def rebucket(
       spark: SparkSession, fromDir: String, toDir: String,
-      newBuckets: Int): Unit = {
-    require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
-    val m = readMeta(spark, fromDir).getOrElse(throw new IllegalArgumentException(
-      s"no banded catalog at $fromDir to rebucket"))
-    require(readMeta(spark, toDir).isEmpty &&
-      dataFiles(fs(spark, toDir), toDir).isEmpty,
-      s"rebucket target $toDir is not empty; use a fresh dir")
-    read(spark, fromDir)
-      .groupBy(col("band"), col("band_key"), col("id"))
-      .agg(first(col("__sig")).as("__sig"), max(col("added")).as("added"))
-      .select(col("band"), col("band_key"), col("id"), col("__sig"),
-        col("added"), bucketOf(col("band_key"), newBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "band_key") // see append(): bucket prefix
-      .write.mode("append").partitionBy("bucket").parquet(toDir)
-    // commit marker: rows are complete
-    writeMeta(spark, toDir, m.copy(numBuckets = newBuckets))
-  }
+      newBuckets: Int): Unit =
+    store.rebucket(spark, fromDir, toDir, newBuckets, read(spark, fromDir))(
+      writeMeta(spark, toDir, readMeta(spark, fromDir).get
+        .copy(numBuckets = newBuckets)))
 
-  // ------------------------------------------------------- compaction
-
-  private def dataFiles(f: FileSystem, dir: String): Seq[Path] = {
-    def walk(p: Path): Seq[Path] = {
-      val entries = f.listStatus(p).toSeq
-      entries.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath) ++
-        entries.filter(s => s.isDirectory && !s.getPath.getName.startsWith("_"))
-          .flatMap(s => walk(s.getPath))
-    }
-    val root = new Path(dir)
-    if (f.exists(root)) walk(root) else Seq.empty
-  }
+  // ----------------------------------------------------- maintenance
 
   /** Number of parquet data files currently in the catalog — the
     * compaction trigger signal (per-trigger appends each add up to one
     * file per touched bucket). */
   def fileCount(spark: SparkSession, dir: String): Int =
-    dataFiles(fs(spark, dir), dir).size
+    store.fileCount(spark, dir)
 
-  /** Parquet data files per bucket — the PER-BUCKET compaction trigger.
-    * A catalog's steady-state floor is one file per bucket, so any
-    * global file-count threshold below `numBuckets` would force a full
-    * rewrite every time once the catalog has enough buckets; compaction
-    * decisions at scale must be per bucket (LSM-style). */
+  /** Parquet data files per bucket ([[BucketedStore.bucketFileCounts]]). */
   def bucketFileCounts(spark: SparkSession, dir: String): Map[Int, Int] =
-    graft.ops.GrowthPolicy.partitionStats(fs(spark, dir), new Path(dir), "bucket=")
-      .map { case (b, s) => (b, s._1) }
+    store.bucketFileCounts(spark, dir)
 
-  /** Parquet bytes per bucket — the growth signal behind
-    * [[graft.ops.GrowthPolicy]] (see [[ExactCatalog.bucketByteSizes]]). */
+  /** Parquet bytes per bucket ([[BucketedStore.bucketByteSizes]]). */
   def bucketByteSizes(spark: SparkSession, dir: String): Map[Int, Long] =
-    graft.ops.GrowthPolicy.partitionStats(fs(spark, dir), new Path(dir), "bucket=")
-      .map { case (b, s) => (b, s._2) }
+    store.bucketByteSizes(spark, dir)
 
   /** Occupancy signals through the shared policy; `autoCompact = true`
     * runs the recommended per-bucket compactions ([[rebucket]] is only
@@ -369,135 +229,27 @@ object BandedCatalog {
   def maintain(
       spark: SparkSession, dir: String,
       policy: graft.ops.GrowthPolicy.Policy = graft.ops.GrowthPolicy.Policy(),
-      autoCompact: Boolean = false): Seq[graft.ops.GrowthPolicy.Action] = {
-    val m = readMeta(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no banded catalog at $dir"))
-    val stats = graft.ops.GrowthPolicy.partitionStats(
-      fs(spark, dir), new Path(dir), "bucket=") // ONE walk for both signals
-    val acts = graft.ops.GrowthPolicy.recommend(
-      m.numBuckets, stats.map { case (b, s) => (b, s._2) },
-      stats.map { case (b, s) => (b, s._1) }, policy)
-    if (autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, dir, buckets = Some(bs))
-      case _ => ()
-    }
-    acts
-  }
+      autoCompact: Boolean = false): Seq[graft.ops.GrowthPolicy.Action] =
+    store.maintain(spark, dir, policy, autoCompact)
 
-  /** [[maintain]] over a [[graft.ops.VersionedStore]] root — the
-    * fully-executable lifecycle: auto-compact in place, and a tripped
-    * Rebucket EXECUTED as [[rebucket]] into the next version (readers
-    * keep resolving a committed version at every instant; a crash
-    * mid-rebucket leaves the new version meta-less and the old one
-    * serving). Predecessors are retired after the swap. Returns the
-    * serving dir plus the actions that tripped. */
+  /** [[maintain]] over a [[graft.ops.VersionedStore]] root
+    * ([[BucketedStore.maintainVersioned]]): auto-compact in place, a
+    * tripped Rebucket executed as [[rebucket]] into the next version. */
   def maintainVersioned(
       spark: SparkSession, root: String,
       policy: graft.ops.GrowthPolicy.Policy = graft.ops.GrowthPolicy.Policy(),
       autoCompact: Boolean = true
-  ): (String, Seq[graft.ops.GrowthPolicy.Action]) = {
-    val committed = (d: String) => readMeta(spark, d).isDefined
-    val cur = graft.ops.VersionedStore.current(spark, root, committed)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed banded catalog under versioned root $root"))
-    // recommend first WITHOUT the in-place compaction — a tripped
-    // Rebucket rewrites the whole store into the next version anyway,
-    // so compacting the predecessor it retires is wasted I/O (see
-    // ExactCatalog.maintainVersioned)
-    val acts = maintain(spark, cur, policy, autoCompact = false)
-    val moved = acts.collectFirst {
-      case graft.ops.GrowthPolicy.Rebucket(n, _) =>
-        graft.ops.VersionedStore.cutover(spark, root, committed)(
-          rebucket(spark, cur, _, n))
-    }
-    if (moved.isEmpty && autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, cur, buckets = Some(bs))
-      case _ => ()
-    }
-    moved.foreach(_ => graft.ops.VersionedStore.retire(spark, root, committed))
-    (moved.getOrElse(cur), acts)
-  }
+  ): (String, Seq[graft.ops.GrowthPolicy.Action]) =
+    store.maintainVersioned(spark, root, policy, autoCompact)(
+      rebucket(spark, _, _, _))
 
   /** Compact the per-trigger appends: rewrite each selected bucket as
     * one band_key-sorted file, optionally dropping rows whose `added`
-    * tag is below `retainAddedFrom` (age/count retention — the caller
-    * decides what the tag means: batch id, crawl id, epoch day).
-    *
-    * `buckets = None` compacts the WHOLE catalog — the retention-sweep
-    * shape (a cutoff only fully applies catalog-wide through a full
-    * sweep). `buckets = Some(…)` rewrites only those buckets — the
-    * steady-state hygiene shape at scale, where a full rewrite of a
-    * multi-TB catalog per trigger-window would dwarf the appends it
-    * merges; rows in unselected buckets are untouched (their retention
-    * applies whenever THEY next compact).
-    *
-    * Duplicate-tolerant swap: merged files are MOVED IN before the old
-    * files are deleted, so a crash anywhere leaves a catalog with (at
-    * worst) duplicate rows, which every reader already tolerates; no
-    * window exists where rows are missing. */
+    * tag is below `retainAddedFrom`; `buckets = None` = full catalog
+    * ([[BucketedStore.compact]]). */
   def compact(
       spark: SparkSession, dir: String,
       retainAddedFrom: Option[Long] = None,
-      buckets: Option[Seq[Int]] = None): Unit = {
-    val f = fs(spark, dir)
-    if (readMeta(spark, dir).isEmpty) return
-    val inScope: Path => Boolean = buckets match {
-      case None => _ => true
-      case Some(bs) =>
-        val names = bs.map(b => s"bucket=$b").toSet
-        p => names.contains(p.getParent.getName)
-    }
-    val oldFiles = dataFiles(f, dir).filter(inScope)
-    if (oldFiles.isEmpty) return
-
-    val scoped = buckets match {
-      case Some(bs) =>
-        graft.ops.Listing.driverSide(spark) {
-          spark.read.schema(DataSchema).parquet(dir)
-        }.filter(col("bucket").isin(bs: _*))
-      case None => graft.ops.Listing.driverSide(spark) {
-        spark.read.schema(DataSchema).parquet(dir)
-      }
-    }
-    val kept = retainAddedFrom match {
-      case Some(cutoff) => scoped.filter(col("added") >= cutoff)
-      case None => scoped
-    }
-    // stage the merged catalog next to the live one, then move files in
-    val tmp = s"$dir/_compacting"
-    f.delete(new Path(tmp), true)
-    kept
-      // a doc's rows can appear in several input files after replayed
-      // appends or an interrupted compaction; collapse them while we are
-      // rewriting anyway, keeping the LATEST added tag (so retention
-      // ages a re-seen doc from its most recent sighting)
-      .groupBy(col("bucket"), col("band"), col("band_key"), col("id"))
-      .agg(first(col("__sig")).as("__sig"), max(col("added")).as("added"))
-      .select(col("band"), col("band_key"), col("id"), col("__sig"),
-        col("added"), col("bucket"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "band_key") // see append(): bucket prefix
-      .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    for (bucketDir <- f.listStatus(new Path(tmp)).toSeq
-         if bucketDir.isDirectory && bucketDir.getPath.getName.startsWith("bucket=")) {
-      val target = new Path(dir, bucketDir.getPath.getName)
-      f.mkdirs(target)
-      for (part <- f.listStatus(bucketDir.getPath).toSeq
-           if part.isFile && part.getPath.getName.endsWith(".parquet")) {
-        val dest = new Path(target, s"compacted-${part.getPath.getName}")
-        // Hadoop rename reports failure by RETURNING FALSE (same trap
-        // Pipe.compact guards). Proceeding to the old-file delete after
-        // a failed move would drop the only copy of those rows — abort
-        // instead: the already-moved files are harmless duplicates of
-        // the still-present inputs, which every reader tolerates.
-        if (!f.rename(part.getPath, dest)) throw new java.io.IOException(
-          s"catalog compaction: rename ${part.getPath} -> $dest failed; " +
-            "old files left in place (duplicates only, no loss)")
-      }
-    }
-    oldFiles.foreach(p => f.delete(p, false))
-    f.delete(new Path(tmp), true)
-  }
+      buckets: Option[Seq[Int]] = None): Unit =
+    store.compact(spark, dir, retainAddedFrom, buckets)
 }

@@ -1,8 +1,7 @@
 package graft.dedup
 
-import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,11 +30,11 @@ import org.apache.spark.sql.types._
   *    a year-long pipeline stops suppressing new documents against
   *    crawls it no longer serves. An expired document that re-appears
   *    is ADMITTED once and re-enters the catalog with the current tag.
-  *  - **crash/duplicate contract** (same as BandedCatalog): appends
-  *    land after survivor delivery, compaction moves merged files in
-  *    before deleting inputs; duplicate `(fp, h2)` rows are harmless
-  *    (the anti-join suppresses against ANY matching row) and collapse
-  *    at the next compaction, keeping the LATEST `added` tag.
+  *  - storage, compaction, rebucket and maintenance are the shared
+  *    [[BucketedStore]] (its scaladoc holds the crash contract);
+  *    duplicate `(fp, h2)` rows are harmless (the anti-join suppresses
+  *    against ANY matching row) and collapse at the next compaction,
+  *    keeping the LATEST `added` tag.
   */
 object ExactCatalog {
 
@@ -65,7 +64,14 @@ object ExactCatalog {
     StructField("bucket", IntegerType, nullable = false)))
 
   def bucketOf(fp: Column, numBuckets: Int): Column =
-    pmod(fp, lit(numBuckets.toLong)).cast(IntegerType)
+    BucketedStore.bucketOf(fp, numBuckets)
+
+  /** Layout, compaction, rebucket and maintenance: duplicate `(fp, h2)`
+    * rows collapse to their latest `added` tag. */
+  private val store = new BucketedStore("exact catalog", DataSchema, "fp",
+    _.groupBy(col("bucket"), col("fp"), col("h2"))
+      .agg(max(col("added")).as("added")),
+    readMeta)
 
   // ------------------------------------------------------------- meta
 
@@ -74,38 +80,20 @@ object ExactCatalog {
     * append, asserted on every open. */
   private def metaPath(dir: String) = new Path(dir, "_graft_exact_catalog.json")
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def metaText(spark: SparkSession, dir: String): Option[String] =
+    BucketedStore.readText(spark, metaPath(dir))
 
-  def readMeta(spark: SparkSession, dir: String): Option[Int] = {
-    val p = metaPath(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  def readMeta(spark: SparkSession, dir: String): Option[Int] =
+    metaText(spark, dir).map(text =>
       """"numBuckets":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toInt)
-        .orElse(throw new IllegalStateException(
-          s"exact catalog meta at $p is malformed: $text"))
-    }
-  }
+        .getOrElse(throw new IllegalStateException(
+          s"exact catalog meta at ${metaPath(dir)} is malformed: $text")))
 
   /** The recorded fingerprint universe ([[KindExact]],
     * [[SubstrCatalog.Kind]], …); None for a missing meta. */
-  def readMetaKind(spark: SparkSession, dir: String): Option[String] = {
-    val p = metaPath(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"kind":"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
-    }
-  }
+  def readMetaKind(spark: SparkSession, dir: String): Option[String] =
+    metaText(spark, dir).flatMap(
+      """"kind":"([^"]+)"""".r.findFirstMatchIn(_).map(_.group(1)))
 
   private def requireKind(spark: SparkSession, dir: String, kind: String): Unit =
     readMetaKind(spark, dir) match {
@@ -134,25 +122,10 @@ object ExactCatalog {
     requireKind(spark, dir, kind)
   }
 
-  /** Data files without a meta file = rows of unknown bucketing; reading
-    * them as empty silently drops all dedup state. Fail loudly (see
-    * [[BandedCatalog]] — same contract; the accreting [[append]] writer
-    * makes the window impossible by writing meta before the first data
-    * write, while the one-shot [[rebucket]] deliberately inverts the
-    * order so this guard doubles as its commit marker). */
-  private def rejectOrphanData(spark: SparkSession, dir: String): Unit =
-    require(dataFiles(fs(spark, dir), dir).isEmpty,
-      s"catalog at $dir has parquet data but no meta file — refusing to " +
-        "treat unknown-layout rows as an empty catalog; rebuild the " +
-        "catalog (or restore its meta) before reading or appending")
-
   private def writeMeta(
-      spark: SparkSession, dir: String, numBuckets: Int, kind: String): Unit = {
-    val out = fs(spark, dir).create(metaPath(dir), true)
-    try out.write(s"""{"numBuckets":$numBuckets,"kind":"$kind"}"""
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      spark: SparkSession, dir: String, numBuckets: Int, kind: String): Unit =
+    BucketedStore.writeText(spark, metaPath(dir),
+      s"""{"numBuckets":$numBuckets,"kind":"$kind"}""")
 
   // ----------------------------------------------------------- entries
 
@@ -177,30 +150,14 @@ object ExactCatalog {
     // meta BEFORE the first data write — a crash between the two must
     // leave a readable catalog, never unrecorded-layout rows
     if (readMeta(spark, dir).isEmpty) {
-      rejectOrphanData(spark, dir)
+      store.rejectOrphanData(spark, dir)
       writeMeta(spark, dir, numBuckets, kind)
     } else if (readMetaKind(spark, dir).isEmpty)
       // kind-validated above (a kind-less meta only admits the exact
       // reader) — self-heal the tag so the catalog is guarded from now on
       writeMeta(spark, dir, readMeta(spark, dir).get, kind)
-    val frame = entries.select(col("fp"), col("h2"), lit(added).as("added"),
-      bucketOf(col("fp"), numBuckets).as("bucket"))
-    // manifest bookkeeping (r18, guide §6): the touched buckets ride the
-    // write itself as an observed aggregate — no extra job, no listing
-    // beyond the touched dirs when the manifest is updated after commit
-    val obs =
-      if (graft.ops.Manifest.enabled) Some(org.apache.spark.sql.Observation())
-      else None
-    obs.fold(frame)(o => frame.observe(o, collect_set(col("bucket")).as("touched")))
-      .repartition(col("bucket"))
-      // bucket prefix: satisfies the partitioned writer's required
-      // ordering so no extra Sort is planned and the fp file order
-      // (row-group min/max skipping) survives — see BandedCatalog.append
-      .sortWithinPartitions("bucket", "fp")
-      .write.mode("append").partitionBy("bucket").parquet(dir)
-    obs.foreach(o => graft.ops.Manifest.recordAppend(spark, dir,
-      o.get("touched").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Number].intValue).toSeq))
+    store.write(entries.select(col("fp"), col("h2"), lit(added).as("added"),
+      bucketOf(col("fp"), numBuckets).as("bucket")), dir)
   }
 
   // -------------------------------------------------------------- read
@@ -209,13 +166,11 @@ object ExactCatalog {
   def read(spark: SparkSession, dir: String,
       kind: String = KindExact): DataFrame =
     if (readMeta(spark, dir).isEmpty) {
-      rejectOrphanData(spark, dir)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
+      store.rejectOrphanData(spark, dir)
+      store.empty(spark)
     } else {
       requireKind(spark, dir, kind)
-      graft.ops.Listing.driverSide(spark) {
-        spark.read.schema(DataSchema).parquet(dir)
-      }
+      store.readAll(spark, dir)
     }
 
   /** The catalog rows a batch can possibly match: bucket partition
@@ -239,41 +194,28 @@ object ExactCatalog {
       spark: SparkSession, dir: String, batchEntries: DataFrame,
       maxPushdownKeys: Int = DefaultMaxPushdownKeys,
       kind: String = KindExact): DataFrame =
-    readMeta(spark, dir) match {
-      case None =>
-        rejectOrphanData(spark, dir)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
-      case Some(numBuckets) =>
-        requireKind(spark, dir, kind)
-        // ONE bounded collect in the common case (see
-        // [[BandedCatalog.readForBatch]]): capped distinct fingerprints,
-        // buckets derived driver-side (bucket = pmod(fp, numBuckets));
-        // only a key overflow pays a second job, for the per-bucket
-        // ranges (≤ numBuckets rows). The collect runs BEFORE any
-        // relation is built, and the relation covers ONLY the probed
-        // buckets' directories ([[BandedCatalog.readBucketDirs]]) — the
-        // per-trigger file listing is O(probed buckets), not O(catalog).
-        val fps = batchEntries.select(col("fp"))
-          .distinct().limit(maxPushdownKeys + 1)
-          .collect().map(_.getLong(0))
-        if (fps.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
-        else if (fps.length > maxPushdownKeys) {
-          val ranges = batchEntries
-            .select(bucketOf(col("fp"), numBuckets).as("bucket"), col("fp"))
-            .groupBy(col("bucket"))
-            .agg(min(col("fp")).as("lo"), max(col("fp")).as("hi"),
-              countDistinct(col("fp")).as("n"))
-            .collect()
-            .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          readRangeSplit(spark, dir, ranges.toIndexedSeq, numBuckets)
-        } else {
-          val buckets = fps
-            .map(f => (((f % numBuckets) + numBuckets) % numBuckets).toInt)
-            .distinct
-          BandedCatalog.readBucketDirs(spark, dir, buckets.toSeq, DataSchema, numBuckets)
-            .filter(col("fp").isin(fps.toSeq: _*))
-        }
+    probe(spark, dir, kind) { numBuckets =>
+      // ONE bounded collect in the common case (see
+      // [[BandedCatalog.readForBatch]]): capped distinct fingerprints,
+      // buckets derived driver-side (bucket = pmod(fp, numBuckets));
+      // only a key overflow pays a second job, for the per-bucket
+      // ranges (≤ numBuckets rows). The collect runs BEFORE any
+      // relation is built, and the relation covers ONLY the probed
+      // buckets' directories ([[BucketedStore.readBucketDirs]]) — the
+      // per-trigger file listing is O(probed buckets), not O(catalog).
+      val fps = batchEntries.select(col("fp"))
+        .distinct().limit(maxPushdownKeys + 1)
+        .collect().map(_.getLong(0))
+      if (fps.length > maxPushdownKeys) {
+        val ranges = batchEntries
+          .select(bucketOf(col("fp"), numBuckets).as("bucket"), col("fp"))
+          .groupBy(col("bucket"))
+          .agg(min(col("fp")).as("lo"), max(col("fp")).as("hi"),
+            countDistinct(col("fp")).as("n"))
+          .collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        readRangeSplit(spark, dir, ranges.toIndexedSeq, numBuckets)
+      } else readKeys(spark, dir, fps, numBuckets)
     }
 
   /** [[readForBatch]] for a key set that is ALREADY on the driver (r18,
@@ -290,28 +232,37 @@ object ExactCatalog {
       spark: SparkSession, dir: String, keys: Array[Long],
       maxPushdownKeys: Int = DefaultMaxPushdownKeys,
       kind: String = KindExact): DataFrame =
+    probe(spark, dir, kind) { numBuckets =>
+      val fps = keys.distinct
+      if (fps.length > maxPushdownKeys) {
+        val ranges = fps.groupBy(BucketedStore.bucketOfKey(_, numBuckets))
+          .map { case (b, ks) => (b, ks.min, ks.max, ks.length.toLong) }
+        readRangeSplit(spark, dir, ranges.toIndexedSeq, numBuckets)
+      } else readKeys(spark, dir, fps, numBuckets)
+    }
+
+  /** The probe head shared by [[readForBatch]] and [[readForKeys]]: an
+    * empty frame for a dir without meta (after the orphan-data guard),
+    * else `body(numBuckets)` once the kind checks out. */
+  private def probe(spark: SparkSession, dir: String, kind: String)(
+      body: Int => DataFrame): DataFrame =
     readMeta(spark, dir) match {
       case None =>
-        rejectOrphanData(spark, dir)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
+        store.rejectOrphanData(spark, dir)
+        store.empty(spark)
       case Some(numBuckets) =>
         requireKind(spark, dir, kind)
-        val fps = keys.distinct
-        def bucketOfKey(f: Long): Int =
-          (((f % numBuckets) + numBuckets) % numBuckets).toInt
-        if (fps.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
-        else if (fps.length > maxPushdownKeys) {
-          val ranges = fps.groupBy(bucketOfKey).map { case (b, ks) =>
-            (b, ks.min, ks.max, ks.length.toLong)
-          }.toIndexedSeq
-          readRangeSplit(spark, dir, ranges, numBuckets)
-        } else {
-          val buckets = fps.map(bucketOfKey).distinct
-          BandedCatalog.readBucketDirs(spark, dir, buckets.toSeq, DataSchema, numBuckets)
-            .filter(col("fp").isin(fps.toSeq: _*))
-        }
+        body(numBuckets)
     }
+
+  /** The pushed-key read: the keys' buckets, `fp IN (keys)`. */
+  private def readKeys(
+      spark: SparkSession, dir: String, fps: Array[Long],
+      numBuckets: Int): DataFrame =
+    if (fps.isEmpty) store.empty(spark)
+    else store.readBucketDirs(spark, dir,
+      fps.map(BucketedStore.bucketOfKey(_, numBuckets)).distinct.toSeq, numBuckets)
+      .filter(col("fp").isin(fps.toSeq: _*))
 
   /** The DENSITY-SPLIT overflow read shared by [[readForBatch]] and
     * [[readForKeys]] (r17, guide §1.2/§2.3 — don't pay a predicate that
@@ -344,13 +295,12 @@ object ExactCatalog {
     val (skippable, dense) = ranges.partition(_._4 <= 3L)
     val denseRead =
       if (dense.isEmpty) None
-      else Some(BandedCatalog.readBucketDirs(
-        spark, dir, dense.map(_._1).toSeq, DataSchema, numBuckets))
+      else Some(store.readBucketDirs(spark, dir, dense.map(_._1).toSeq, numBuckets))
     val sparseRead =
       if (skippable.isEmpty) None
       else {
-        val base = BandedCatalog.readBucketDirs(
-          spark, dir, skippable.map(_._1).toSeq, DataSchema, numBuckets)
+        val base = store.readBucketDirs(
+          spark, dir, skippable.map(_._1).toSeq, numBuckets)
         val singles = skippable.filter(_._4 == 1L).map(_._2)
         val multi = skippable.filter(_._4 > 1L)
         val arms =
@@ -365,8 +315,7 @@ object ExactCatalog {
       case (Some(s), Some(d)) => s.unionAll(d)
       case (Some(s), None) => s
       case (None, Some(d)) => d
-      case (None, None) => // unreachable: callers pass non-empty ranges
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataSchema)
+      case (None, None) => store.empty(spark) // unreachable: ranges non-empty
     }
   }
 
@@ -380,7 +329,7 @@ object ExactCatalog {
     *
     * Write your downstream inside `deliver`, not after the call: the
     * append must land AFTER survivor delivery (the crash contract in
-    * the class doc) — a crash between an already-landed append and a
+    * [[BucketedStore]]) — a crash between an already-landed append and a
     * post-return downstream write would suppress those documents on
     * replay without them ever having been delivered (at-most-once
     * loss). With `deliver`, a crash anywhere replays the batch into
@@ -419,204 +368,65 @@ object ExactCatalog {
 
   // -------------------------------------------------------- rebucket
 
-  /** Re-shard the catalog into `toDir` under a DIFFERENT bucket count —
-    * the growth path when the survivor count outgrows the bucket choice
-    * (a bucket should stay file-sized; `numBuckets` is fixed per layout
-    * because `bucket = fp mod numBuckets` IS the pruning contract).
-    *
-    * Deliberately a rebuild-into-fresh-dir, not an in-place mutation: a
-    * directory-level re-shard has no atomic swap on HDFS-like stores,
-    * while this shape needs none — the SOURCE stays readable and
-    * untouched throughout (writers pause, readers keep going), the new
-    * layout lands complete (one bucket-shuffled write, rows collapsed
-    * like [[compact]], then meta LAST as the commit marker — same
-    * discipline as `IvfIndex.build`: a one-shot build, unlike the
-    * accreting [[init]] path, can afford meta-as-commit), and the
-    * caller cuts over by path. A crash mid-rebucket leaves a `toDir`
-    * with rows but NO meta, so every reader fails loudly instead of
-    * silently accepting a partial fingerprint set (which would readmit
-    * duplicates); rerun into a FRESH target (the non-empty-target guard
-    * makes reuse refuse loudly). */
+  /** Re-shard the catalog into the fresh dir `toDir` under a DIFFERENT
+    * bucket count — the growth path when the survivor count outgrows the
+    * bucket choice (`numBuckets` is fixed per layout because
+    * `bucket = fp mod numBuckets` IS the pruning contract). The source
+    * stays readable and untouched, the target's meta lands LAST as the
+    * commit marker, and the caller cuts over by path
+    * ([[BucketedStore.rebucket]]). */
   def rebucket(
       spark: SparkSession, fromDir: String, toDir: String,
       newBuckets: Int): Unit = {
-    require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
-    require(readMeta(spark, fromDir).isDefined,
-      s"no exact catalog at $fromDir to rebucket")
-    require(readMeta(spark, toDir).isEmpty &&
-      dataFiles(fs(spark, toDir), toDir).isEmpty,
-      s"rebucket target $toDir is not empty; use a fresh dir")
-    // kind-agnostic layout op: read under the source's OWN kind (the
-    // universe carries over to toDir's meta below)
-    read(spark, fromDir, readMetaKind(spark, fromDir).getOrElse(KindExact))
-      .groupBy(col("fp"), col("h2")).agg(max(col("added")).as("added"))
-      .select(col("fp"), col("h2"), col("added"),
-        bucketOf(col("fp"), newBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "fp") // see append(): bucket prefix
-      .write.mode("append").partitionBy("bucket").parquet(toDir)
-    // manifest before meta: the meta is the commit marker, so a crash
-    // here leaves an uncommitted dir whether or not the manifest landed
-    graft.ops.Manifest.rebuild(spark, toDir)
-    // commit marker: rows are complete; kind carries over — a rebucket
-    // never changes the fingerprint universe
-    writeMeta(spark, toDir, newBuckets,
-      readMetaKind(spark, fromDir).getOrElse(KindExact))
+    // kind-agnostic layout op: the source's OWN kind carries over — a
+    // rebucket never changes the fingerprint universe
+    def kind = readMetaKind(spark, fromDir).getOrElse(KindExact)
+    store.rebucket(spark, fromDir, toDir, newBuckets, read(spark, fromDir, kind))(
+      writeMeta(spark, toDir, newBuckets, kind))
   }
 
-  // ------------------------------------------------------- compaction
-
-  private def dataFiles(f: FileSystem, dir: String): Seq[Path] = {
-    def walk(p: Path): Seq[Path] = {
-      val entries = f.listStatus(p).toSeq
-      entries.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath) ++
-        entries.filter(s => s.isDirectory && !s.getPath.getName.startsWith("_"))
-          .flatMap(s => walk(s.getPath))
-    }
-    val root = new Path(dir)
-    if (f.exists(root)) walk(root) else Seq.empty
-  }
+  // ------------------------------------------------------- maintenance
 
   def fileCount(spark: SparkSession, dir: String): Int =
-    dataFiles(fs(spark, dir), dir).size
+    store.fileCount(spark, dir)
 
   /** Parquet data files per bucket — the per-bucket compaction trigger
-    * (see [[BandedCatalog.bucketFileCounts]]: global thresholds break
-    * once the steady-state floor of one file per bucket exceeds them). */
+    * ([[BucketedStore.bucketFileCounts]]). */
   def bucketFileCounts(spark: SparkSession, dir: String): Map[Int, Int] =
-    graft.ops.GrowthPolicy.partitionStats(fs(spark, dir), new Path(dir), "bucket=")
-      .map { case (b, s) => (b, s._1) }
+    store.bucketFileCounts(spark, dir)
 
-  /** Parquet bytes per bucket — the growth signal behind
-    * [[graft.ops.GrowthPolicy]]: when the mean configured-bucket size
-    * outgrows the policy target, the catalog wants [[rebucket]]. */
+  /** Parquet bytes per bucket — the [[graft.ops.GrowthPolicy]] growth
+    * signal ([[BucketedStore.bucketByteSizes]]). */
   def bucketByteSizes(spark: SparkSession, dir: String): Map[Int, Long] =
-    graft.ops.GrowthPolicy.partitionStats(fs(spark, dir), new Path(dir), "bucket=")
-      .map { case (b, s) => (b, s._2) }
+    store.bucketByteSizes(spark, dir)
 
   /** Occupancy signals through the shared policy; `autoCompact = true`
-    * runs the recommended per-bucket compactions (the one safely
-    * in-place action — [[rebucket]] needs a fresh dir and a caller-owned
-    * cutover, so it is only ever recommended). */
+    * runs the recommended per-bucket compactions ([[rebucket]] is only
+    * ever recommended). */
   def maintain(
       spark: SparkSession, dir: String,
       policy: graft.ops.GrowthPolicy.Policy = graft.ops.GrowthPolicy.Policy(),
-      autoCompact: Boolean = false): Seq[graft.ops.GrowthPolicy.Action] = {
-    val numBuckets = readMeta(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no exact catalog at $dir"))
-    val stats = graft.ops.GrowthPolicy.partitionStats(
-      fs(spark, dir), new Path(dir), "bucket=") // ONE walk for both signals
-    val acts = graft.ops.GrowthPolicy.recommend(
-      numBuckets, stats.map { case (b, s) => (b, s._2) },
-      stats.map { case (b, s) => (b, s._1) }, policy)
-    if (autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, dir, buckets = Some(bs))
-      case _ => ()
-    }
-    acts
-  }
+      autoCompact: Boolean = false): Seq[graft.ops.GrowthPolicy.Action] =
+    store.maintain(spark, dir, policy, autoCompact)
 
-  /** [[maintain]] over a [[graft.ops.VersionedStore]] root — the
-    * fully-executable lifecycle (see [[BandedCatalog.maintainVersioned]]):
-    * auto-compact in place, a tripped Rebucket executed as [[rebucket]]
-    * into the next version, predecessors retired after the swap. */
+  /** [[maintain]] over a [[graft.ops.VersionedStore]] root
+    * ([[BucketedStore.maintainVersioned]]): auto-compact in place, a
+    * tripped Rebucket executed as [[rebucket]] into the next version. */
   def maintainVersioned(
       spark: SparkSession, root: String,
       policy: graft.ops.GrowthPolicy.Policy = graft.ops.GrowthPolicy.Policy(),
       autoCompact: Boolean = true
-  ): (String, Seq[graft.ops.GrowthPolicy.Action]) = {
-    val committed = (d: String) => readMeta(spark, d).isDefined
-    val cur = graft.ops.VersionedStore.current(spark, root, committed)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed exact catalog under versioned root $root"))
-    // recommend first WITHOUT the in-place compaction: a grown store
-    // typically trips Compact and Rebucket together, and the Rebucket
-    // rewrite ([[rebucket]] collapses duplicates itself) supersedes a
-    // compact of the predecessor it is about to retire — running both
-    // would double the rewrite I/O of the growth event
-    val acts = maintain(spark, cur, policy, autoCompact = false)
-    val moved = acts.collectFirst {
-      case graft.ops.GrowthPolicy.Rebucket(n, _) =>
-        graft.ops.VersionedStore.cutover(spark, root, committed)(
-          rebucket(spark, cur, _, n))
-    }
-    if (moved.isEmpty && autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, cur, buckets = Some(bs))
-      case _ => ()
-    }
-    moved.foreach(_ => graft.ops.VersionedStore.retire(spark, root, committed))
-    (moved.getOrElse(cur), acts)
-  }
+  ): (String, Seq[graft.ops.GrowthPolicy.Action]) =
+    store.maintainVersioned(spark, root, policy, autoCompact)(
+      rebucket(spark, _, _, _))
 
   /** Rewrite each selected bucket as one fp-sorted file, collapsing
     * duplicate `(fp, h2)` rows to their LATEST `added` tag, optionally
-    * dropping rows below `retainAddedFrom` (retention — the caller
-    * decides what the tag means). `buckets = None` = full catalog (the
-    * retention-sweep shape); `Some(…)` = only those buckets (the
-    * steady-state hygiene shape — see [[BandedCatalog.compact]]).
-    * Duplicate-tolerant swap, same as there. */
+    * dropping rows below `retainAddedFrom`; `buckets = None` = full
+    * catalog ([[BucketedStore.compact]]). */
   def compact(
       spark: SparkSession, dir: String,
       retainAddedFrom: Option[Long] = None,
-      buckets: Option[Seq[Int]] = None): Unit = {
-    val f = fs(spark, dir)
-    if (readMeta(spark, dir).isEmpty) return
-    val inScope: Path => Boolean = buckets match {
-      case None => _ => true
-      case Some(bs) =>
-        val names = bs.map(b => s"bucket=$b").toSet
-        p => names.contains(p.getParent.getName)
-    }
-    val oldFiles = dataFiles(f, dir).filter(inScope)
-    if (oldFiles.isEmpty) return
-    val scoped = buckets match {
-      case Some(bs) =>
-        graft.ops.Listing.driverSide(spark) {
-          spark.read.schema(DataSchema).parquet(dir)
-        }.filter(col("bucket").isin(bs: _*))
-      case None => graft.ops.Listing.driverSide(spark) {
-        spark.read.schema(DataSchema).parquet(dir)
-      }
-    }
-    val kept = retainAddedFrom match {
-      case Some(cutoff) => scoped.filter(col("added") >= cutoff)
-      case None => scoped
-    }
-    val tmp = s"$dir/_compacting"
-    f.delete(new Path(tmp), true)
-    kept
-      .groupBy(col("bucket"), col("fp"), col("h2"))
-      .agg(max(col("added")).as("added"))
-      .select(col("fp"), col("h2"), col("added"), col("bucket"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "fp") // see append(): bucket prefix
-      .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[graft.ops.Manifest.Entry]
-    for (bucketDir <- f.listStatus(new Path(tmp)).toSeq
-         if bucketDir.isDirectory && bucketDir.getPath.getName.startsWith("bucket=")) {
-      val target = new Path(dir, bucketDir.getPath.getName)
-      f.mkdirs(target)
-      for (part <- f.listStatus(bucketDir.getPath).toSeq
-           if part.isFile && part.getPath.getName.endsWith(".parquet")) {
-        val dest = new Path(target, s"compacted-${part.getPath.getName}")
-        // failed renames RETURN FALSE; deleting the inputs after one
-        // would lose rows — abort, leaving harmless duplicates
-        if (!f.rename(part.getPath, dest)) throw new java.io.IOException(
-          s"catalog compaction: rename ${part.getPath} -> $dest failed; " +
-            "old files left in place (duplicates only, no loss)")
-        moved += graft.ops.Manifest.Entry(
-          s"${target.getName}/${dest.getName}", part.getLen,
-          part.getModificationTime)
-      }
-    }
-    // manifest swap AFTER the moves, BEFORE the deletes (Manifest class
-    // doc): no window ever has a manifest naming a missing file
-    graft.ops.Manifest.replaceScope(spark, dir,
-      oldFiles.map(graft.ops.Manifest.relPath).toSet, moved.toSeq)
-    oldFiles.foreach(p => f.delete(p, false))
-    f.delete(new Path(tmp), true)
-  }
+      buckets: Option[Seq[Int]] = None): Unit =
+    store.compact(spark, dir, retainAddedFrom, buckets)
 }

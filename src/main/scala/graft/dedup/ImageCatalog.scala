@@ -266,13 +266,13 @@ object ImageCatalog {
       autoCompact: Boolean = false): Seq[graft.ops.GrowthPolicy.Action] = {
     val acts = ExactCatalog.maintain(spark, pairPhashDir(root), policy,
       autoCompact = false)
-    if (autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, pairPhashDir(root), buckets = Some(bs))
-        compact(spark, pairExactDir(root), buckets = Some(bs))
-      case _ => ()
-    }
+    if (autoCompact) BucketedStore.compactAll(acts)(compactPair(spark, root, _))
     acts
+  }
+
+  private def compactPair(spark: SparkSession, root: String, bs: Seq[Int]): Unit = {
+    compact(spark, pairPhashDir(root), buckets = Some(bs))
+    compact(spark, pairExactDir(root), buckets = Some(bs))
   }
 
   /** [[maintainPair]] over a [[graft.ops.VersionedStore]] root of PAIR
@@ -282,24 +282,8 @@ object ImageCatalog {
       spark: SparkSession, root: String,
       policy: graft.ops.GrowthPolicy.Policy = graft.ops.GrowthPolicy.Policy(),
       autoCompact: Boolean = true
-  ): (String, Seq[graft.ops.GrowthPolicy.Action]) = {
-    val committed = (d: String) => isCommittedPair(spark, d)
-    val cur = graft.ops.VersionedStore.current(spark, root, committed)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed image catalog pair under versioned root $root"))
-    val acts = maintainPair(spark, cur, policy, autoCompact = false)
-    val moved = acts.collectFirst {
-      case graft.ops.GrowthPolicy.Rebucket(n, _) =>
-        graft.ops.VersionedStore.cutover(spark, root, committed)(
-          rebucketPair(spark, cur, _, n))
-    }
-    if (moved.isEmpty && autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, pairPhashDir(cur), buckets = Some(bs))
-        compact(spark, pairExactDir(cur), buckets = Some(bs))
-      case _ => ()
-    }
-    moved.foreach(_ => graft.ops.VersionedStore.retire(spark, root, committed))
-    (moved.getOrElse(cur), acts)
-  }
+  ): (String, Seq[graft.ops.GrowthPolicy.Action]) =
+    BucketedStore.maintainVersioned(spark, root, "image catalog pair",
+      isCommittedPair(spark, _), maintainPair(spark, _, policy),
+      rebucketPair(spark, _, _, _), compactPair(spark, _, _), autoCompact)
 }

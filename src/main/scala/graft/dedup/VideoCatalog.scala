@@ -98,11 +98,13 @@ object VideoCatalog {
     * steady-state at real batch sizes anyway. */
   val SigProbeMaxPushdownKeys = 1024
 
-  /** Cap on the candidate-vid set the fused sig+cnt probe collects to
-    * the driver (r18): 2 MB of longs — far above any sane micro-batch's
-    * candidate fan-out, far below driver-memory risk. Past it the probe
-    * falls back to the distributed r17 shape (per-tier readForBatch). */
-  val MaxDriverProbeVids = 1 << 18
+  /** Driver budget of the fused sig+cnt probe (r18): the collected
+    * candidate vids expand to vids × n sig fingerprints on the driver,
+    * so the fused path runs only while that expansion fits 2 MB of
+    * longs — far above a sane micro-batch's candidate fan-out, far
+    * below driver-memory risk. Past it the probe falls back to the
+    * distributed r17 shape (per-tier readForBatch). */
+  val MaxDriverProbeFps = 1 << 18
 
   def blockKind(n: Int): String = s"$BlockKindPrefix$n$KindSuffix"
   def sigKind(n: Int): String = s"$SigKindPrefix$n$KindSuffix"
@@ -217,7 +219,18 @@ object VideoCatalog {
       numBuckets: Int = ExactCatalog.DefaultBuckets, added: Long = 0L,
       maxPushdownKeys: Int = ExactCatalog.DefaultMaxPushdownKeys,
       maxCandidatesPerKey: Int = 4096,
-      deliver: DataFrame => Unit = _ => ()): DataFrame = {
+      deliver: DataFrame => Unit = _ => ()): DataFrame =
+    applyBatchWithin(MaxDriverProbeFps)(batch, root, idCol, binCol, n,
+      maxHamming, numBuckets, added, maxPushdownKeys, maxCandidatesPerKey,
+      deliver)
+
+  /** [[applyBatch]] under an explicit fused-probe budget (in sig
+    * fingerprints) — the seam that lets a spec drive the fallback. */
+  private[dedup] def applyBatchWithin(driverProbeFps: Int)(
+      batch: DataFrame, root: String, idCol: String, binCol: String,
+      n: Int, maxHamming: Int, numBuckets: Int, added: Long,
+      maxPushdownKeys: Int, maxCandidatesPerKey: Int,
+      deliver: DataFrame => Unit): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= ImageDedup.MaxBlockedHamming,
       s"quarter blocking guarantees recall only to Hamming " +
         s"${ImageDedup.MaxBlockedHamming}; got $maxHamming")
@@ -263,12 +276,13 @@ object VideoCatalog {
     // density split is pure arithmetic — ExactCatalog.readForKeys). The
     // (cvid, k, fp) reassembly mapping becomes a LocalRelation, so the
     // sigCat join broadcasts it without touching the cluster. Past
-    // MaxDriverProbeVids the distributed r17 shape takes over — the
-    // driver never holds an unbounded candidate set.
+    // the driver budget (vids × effN fps) the distributed r17 shape
+    // takes over — the driver never holds an unbounded candidate set.
+    val maxVids = driverProbeFps / effN
     val cvidsCapped = cands.select(col("cvid")).distinct()
-      .limit(MaxDriverProbeVids + 1).collect().map(_.getLong(0))
+      .limit(maxVids + 1).collect().map(_.getLong(0))
     val (sigCat, cntCat, candFps) =
-      if (cvidsCapped.length <= MaxDriverProbeVids) {
+      if (cvidsCapped.length <= maxVids) {
         val sigFps = cvidsCapped.flatMap(v =>
           Array.tabulate(effN)(k => (v << 6) | k.toLong))
         val sc = ExactCatalog.readForKeys(
@@ -403,11 +417,8 @@ object VideoCatalog {
       autoCompact: Boolean = false): Seq[graft.ops.GrowthPolicy.Action] = {
     val acts = ExactCatalog.maintain(spark, sigDir(root), policy,
       autoCompact = false)
-    if (autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, root, buckets = Some(bs))
-      case _ => ()
-    }
+    if (autoCompact) BucketedStore.compactAll(acts)(bs =>
+      compact(spark, root, buckets = Some(bs)))
     acts
   }
 
@@ -419,23 +430,9 @@ object VideoCatalog {
       spark: SparkSession, root: String,
       policy: graft.ops.GrowthPolicy.Policy = graft.ops.GrowthPolicy.Policy(),
       autoCompact: Boolean = true
-  ): (String, Seq[graft.ops.GrowthPolicy.Action]) = {
-    val committed = (d: String) => isCommitted(spark, d)
-    val cur = graft.ops.VersionedStore.current(spark, root, committed)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed video catalog under versioned root $root"))
-    val acts = maintain(spark, cur, policy, autoCompact = false)
-    val moved = acts.collectFirst {
-      case graft.ops.GrowthPolicy.Rebucket(n, _) =>
-        graft.ops.VersionedStore.cutover(spark, root, committed)(
-          rebucket(spark, cur, _, n))
-    }
-    if (moved.isEmpty && autoCompact) acts.foreach {
-      case graft.ops.GrowthPolicy.Compact(bs) =>
-        compact(spark, cur, buckets = Some(bs))
-      case _ => ()
-    }
-    moved.foreach(_ => graft.ops.VersionedStore.retire(spark, root, committed))
-    (moved.getOrElse(cur), acts)
-  }
+  ): (String, Seq[graft.ops.GrowthPolicy.Action]) =
+    BucketedStore.maintainVersioned(spark, root, "video catalog",
+      isCommitted(spark, _), maintain(spark, _, policy),
+      rebucket(spark, _, _, _), (d, bs) => compact(spark, d, buckets = Some(bs)),
+      autoCompact)
 }

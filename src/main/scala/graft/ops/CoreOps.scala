@@ -18,7 +18,8 @@ object CoreOps {
     * (guide §2.6: actions are only sequential because driver code calls
     * them sequentially — each small job's task tail otherwise leaves the
     * executors idle). FIFO scheduling gives the back-fill behaviour
-    * wanted; a failure on either side propagates after both complete.
+    * wanted; a failure on either side propagates after both complete,
+    * and when both fail, `b`'s error rides `a`'s as a suppressed one.
     * Callers own the independence claim (disjoint output dirs, no
     * ordering contract between the two). */
   def inParallel(a: => Unit, b: => Unit): Unit = {
@@ -27,7 +28,13 @@ object CoreOps {
     t.setDaemon(true)
     t.start()
     try a
-    finally t.join()
+    catch {
+      case e: Throwable =>
+        t.join()
+        Option(err.get()).filter(_ ne e).foreach(e.addSuppressed)
+        throw e
+    }
+    t.join()
     Option(err.get()).foreach(throw _)
   }
 

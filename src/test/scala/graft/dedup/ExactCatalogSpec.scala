@@ -1,6 +1,7 @@
 package graft.dedup
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
@@ -19,6 +20,14 @@ class ExactCatalogSpec extends AnyFunSuite with SparkTestBase {
 
   private def docs(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
+
+  /** The catalog's parquet data files (meta and staging excluded). */
+  private def parquetFiles(dir: String): Set[String] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.map(_.toString)
+      .filter(p => p.endsWith(".parquet") && !p.contains("/_")).toSet
+    finally walk.close()
+  }
 
   test("incremental dedup through the catalog matches the flat path") {
     val dir = tmpDir()
@@ -358,5 +367,26 @@ class ExactCatalogSpec extends AnyFunSuite with SparkTestBase {
       ExactCatalog.rebucket(spark, dir, tmpDir() + "/z", 0)
     }
     assert(e3.getMessage.contains("must be positive"))
+  }
+
+  test("degenerate batches: an empty append or an all-duplicate batch changes neither the files nor the next probe") {
+    val dir = tmpDir()
+    val corpus = docs((1L to 50L).map(i => i -> s"doc $i"): _*)
+    ExactCatalog.append(ExactCatalog.entriesOf(corpus, "text"), dir)
+    val probe = ExactCatalog.entriesOf(
+      docs(900L -> "doc 7", 901L -> "doc 42", 902L -> "never seen"), "text")
+    def state() = (parquetFiles(dir),
+      ExactCatalog.readForBatch(spark, dir, probe).collect().toSet)
+    val before = state()
+    assert(before._1.nonEmpty && before._2.size == 2)
+
+    ExactCatalog.append(ExactCatalog.entriesOf(docs(), "text"), dir, added = 1L)
+    assert(state() == before, "an empty append must be a no-op")
+
+    // every doc already cataloged: nothing survives, nothing is appended
+    val dupes = docs((1L to 50L).map(i => (100L + i) -> s"doc $i"): _*)
+    assert(ExactCatalog.applyBatch(dupes, dir, "doc_id", "text",
+      added = 2L).isEmpty)
+    assert(state() == before, "an all-duplicate batch must be a no-op")
   }
 }

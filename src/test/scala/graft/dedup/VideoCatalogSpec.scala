@@ -206,4 +206,29 @@ class VideoCatalogSpec extends AnyFunSuite with SparkTestBase {
       vids(200L until 203L, _ - 197L, _ => 1), root, "id", "vid",
       added = 3L).count() == 0)
   }
+
+  test("fused-probe budget: the distributed fallback gives the same survivors") {
+    val fused = tmpDir() + "/fused"
+    val fallback = tmpDir() + "/fallback"
+    for (root <- Seq(fused, fallback)) {
+      val _ = VideoCatalog.applyBatch(vids(0L until 10L, identity),
+        root, "id", "vid", added = 0L)
+    }
+    // byte copies of seeds 0..2, re-encodes of seeds 3..5, fresh 700..702
+    val batch = vids(100L until 103L, _ - 100L)
+      .unionByName(vids(200L until 203L, _ - 197L, _ => 1))
+      .unionByName(vids(700L until 703L, identity))
+    def ids(df: DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    val viaFused = ids(VideoCatalog.applyBatch(batch, fused, "id", "vid",
+      added = 1L))
+    // a zero budget admits no candidate vid to the driver: every probe
+    // with candidates takes the per-tier readForBatch path
+    val viaFallback = ids(VideoCatalog.applyBatchWithin(0)(batch, fallback,
+      "id", "vid", VideoDedup.DefaultSampledFrames,
+      ImageDedup.MaxBlockedHamming, ExactCatalog.DefaultBuckets, 1L,
+      ExactCatalog.DefaultMaxPushdownKeys, 4096, _ => ()))
+    assert(viaFused == (700L until 703L).toSet)
+    assert(viaFallback == viaFused)
+  }
 }

@@ -181,4 +181,19 @@ class CoreOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(counts == Set(("t1", "I", 1L), ("t1", "U", 1L), ("t1", "D", 1L),
       ("t2", "I", 1L), ("t2", "T", 1L)))
   }
+
+  test("inParallel: when both sides throw, both errors are visible") {
+    val e = intercept[IllegalStateException] {
+      CoreOps.inParallel(
+        throw new IllegalStateException("a failed"),
+        throw new java.io.IOException("b failed"))
+    }
+    assert(e.getMessage == "a failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("b failed"))
+    // a lone failure on either side still propagates as itself
+    val eb = intercept[java.io.IOException] {
+      CoreOps.inParallel((), throw new java.io.IOException("b only"))
+    }
+    assert(eb.getMessage == "b only" && eb.getSuppressed.isEmpty)
+  }
 }

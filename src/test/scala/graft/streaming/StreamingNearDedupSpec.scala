@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -416,5 +417,51 @@ class StreamingNearDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(StreamingNearDedup.applyBatchVersioned(
       mutantsB.toDF("doc_id", "text"), root, "doc_id", "text",
       added = 3L).isEmpty)
+  }
+
+  test("degenerate triggers: empty, all-duplicate and post-compaction empty batches change neither files nor probes") {
+    import spark.implicits._
+    val (b1, b2) = corpus()
+    val dir = Files.createTempDirectory("graft-snd-degenerate").toString + "/catalog"
+    StreamingNearDedup.applyBatch(b1.toDF("doc_id", "text"), dir,
+      "doc_id", "text", compactAboveFiles = 0, added = 1L)
+
+    val m = graft.dedup.BandedCatalog.readMeta(spark, dir).get
+    val probeDocs = b1.take(5).map { case (id, t) => (id + 900000L, mutate(t)) }
+      .toDF("doc_id", "text")
+    val probe = graft.dedup.BandedCatalog.bandRows(
+      Dedup.withMinhashSignature(probeDocs, "text", m.shingleSize,
+        m.bands * m.rowsPerBand).select(col("doc_id").as("id"), col("__sig")),
+      m.bands, m.rowsPerBand, m.numBuckets, 0L)
+    def state() = {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      val files =
+        try walk.iterator().asScala.map(_.toString)
+          .filter(p => p.endsWith(".parquet") && !p.contains("/_")).toSet
+        finally walk.close()
+      (files, graft.dedup.BandedCatalog.readForBatch(spark, dir, probe)
+        .select("band_key", "id", "added").collect().toSet)
+    }
+    def trigger(rows: Seq[(Long, String)], added: Long, compactAbove: Int) =
+      StreamingNearDedup.applyBatch(rows.toDF("doc_id", "text"), dir,
+        "doc_id", "text", compactAboveFiles = compactAbove, added = added)
+
+    val before = state()
+    assert(before._1.nonEmpty && before._2.nonEmpty)
+    assert(trigger(Seq.empty, 2L, 0).isEmpty)
+    assert(state() == before, "an empty trigger must be a no-op")
+    assert(trigger(b1, 3L, 0).isEmpty)
+    assert(state() == before, "an all-duplicate trigger must be a no-op")
+
+    // fresh survivors land, then the catalog compacts to one file per bucket
+    assert(trigger(b2, 4L, 1).count() > 0)
+    assert(graft.dedup.BandedCatalog.bucketFileCounts(spark, dir)
+      .values.forall(_ == 1))
+    val compacted = state()
+    // a redelivered trigger against the compacted catalog: no survivors,
+    // and the probe reads the compacted files, not the deleted inputs
+    assert(trigger(b2, 5L, 1).isEmpty)
+    assert(state() == compacted,
+      "an empty trigger after compaction must be a no-op")
   }
 }
